@@ -700,7 +700,12 @@ def mix_token_budget(
     40 % books **of the token budget**" — where :func:`mix_sources`'
     row-fraction weights only control document counts.
 
-    Shares must be positive and sum to 1. Union is by-name/NULL-fill
+    Shares must be positive and sum to 1. A share whose rounded budget
+    ``round(share × total_budget)`` is 0 raises ``ValueError("budget
+    must be > 0")``, as :func:`sample_to_token_budget` does for the same
+    source budget; it is not turned into an empty source.
+
+    Union is by-name/NULL-fill
     (:func:`~goetl_spark.operators.union.fan_in`), shuffle-free; ALL
     sources share ONE cumsum pass over the union (r18: the per-source
     running sums restart per source inside a single range partition —

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from goetl_spark.session import load_tables
 from goetl_spark.functions import filters as flt
 from goetl_spark.operators import groupby as G
-from goetl_spark.operators.join import JoinConfig, join, lookup, semi_join, anti_join
+from goetl_spark.operators.join import JoinConfig, join, lookup
 from goetl_spark.operators.union import fan_in, distinct, intersect, except_
 from goetl_spark.operators.cdc import capture_changes
 from goetl_spark.operators.scd import scd_type1, scd_type2, scd_type3
@@ -34,16 +34,6 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 # registry: name -> (query_fn, oracle_sql | None)
 _REGISTRY: dict[str, tuple[QueryFn, str | None]] = {}
 
-# Retired rows (round-11, OPERATORS.md "Registry retirement candidates",
-# growth policy decided r8): operators whose semantics are strictly
-# contained in a registered composite sibling give up their @register
-# seat so the registry stays under the staleness-budget capacity.
-# Retirement removes ONLY the seat — the query function, its oracle,
-# its pytest coverage, and the OPERATORS.md §2 parity row all stay, and
-# `scripts/check_oracle.py --retired` still replays them against DuckDB
-# on demand.
-_RETIRED: dict[str, tuple[QueryFn, str | None]] = {}
-
 
 def register(name: str, oracle: str | None):
     def deco(fn: QueryFn) -> QueryFn:
@@ -52,232 +42,20 @@ def register(name: str, oracle: str | None):
     return deco
 
 
-def register_retired(name: str, oracle: str | None):
-    def deco(fn: QueryFn) -> QueryFn:
-        _RETIRED[name] = (fn, oracle)
-        return fn
-    return deco
-
-
-def retired_queries() -> dict[str, QueryFn]:
-    return {name: fn for name, (fn, _) in _RETIRED.items()}
-
-
-def retired_oracle_sql() -> dict[str, str]:
-    return {name: sql for name, (_, sql) in _RETIRED.items() if sql is not None}
-
-
-# The driver's correctness pass covers the FIRST 50 registered queries
-# (observed: CORRECTNESS_r01..r04 emitted the identical 50-key window over
-# registration order). Round-5 rotation (round-3 verdict ask #1): the 18
-# queries that never had a driver row (q47, q48, q53-q58, q60, q61, q68,
-# q69, q74-q78, q81) displace long-stable rows whose green driver rows
-# from r01-r03 remain on record and whose operators stay covered by an
-# in-window sibling: q02/q03/q05 filters ⊂ q01/q55/q56 predicates;
-# q09 union ⊂ q60 heterogeneous fan-in; q11/q12 shaping/dates ⊂ q01/q16;
-# q20 profile sibling of in-window q44; q21/q25 dedup ⊂ q22/q24/q50;
-# q39 UDAF green r03 + unit contract tests; q41/q42 semi/anti ⊂ q78's
-# Q21 semi+anti correlation; q43 cube green r03 sibling of q37 rollup;
-# q49 set ops green r03; q63 unpivot sibling of in-window q62;
-# q66/q67 green r03; q79/q80 round-trips green r03+r04 + unit tests.
-# The six queries the r04 events-schema change broke (q16, q31, q35,
-# q36, q62, q65) stay in-window to re-prove green after the _events fix.
-# The round-5 additions (q82-q93) take the slots of q04/q06/q07/q13/
-# q17/q18/q19/q24/q28/q38/q44 — all of which banked green rows in r04
-# (they were unaffected by the events break) and whose operators recur
-# inside the composite shapes (q55/q56/q76-q78/q83/q84 joins+aggs, q16
-# windows, q70/q72 merge upserts, q22/q50 dedup, q59/q73/q88/q92
-# similarity, q82/q87 percentile bounds, q71/q85 text analysis,
-# q20-profile-r03/q32-pipeline quality checks) — so after this round
-# EVERY registered query has a driver row in the union of
-# CORRECTNESS_r01..r05 (q30/q33/q59/q52/q64 joined the swapped-out set
-# for q94-q98; orchestration stays covered in-window by q32, ANN by
-# q73/q88/q92, window functions by q16 and q96 itself, hash splitting
-# by q52's r04 row plus in-window q53/q61/q86, fuzzy/dedup by
-# q22/q50/q89/q91).
-# Tail queries remain registered and oracle-checkable
-# (scripts/check_oracle.py runs the full registry).
-# Round-7 rotation (staleness budget: 3 recorded rounds — see
-# tests/test_registry.py::test_union_coverage_and_staleness; the
-# 2-round rule saturated once the registry passed 100, since two
-# 50-seat windows cover at most 100 distinct queries. Capacity under
-# the 3-round rule is 150 vs a ~138-and-slowing registry). Seats:
-# (a) the 35 queries absent from r5∪r6 (all r4-last) — q02-q07, q09,
-# q11-q13, q17-q21, q24, q25, q28, q30, q33, q38, q39, q41-q44, q49,
-# q52, q59, q63, q64, q66, q67, q79, q80; (b) changed-code re-seats
-# q82/q87 (r6's per-partition sketch compress needs a fresh driver
-# row); (c) the 13 round-7 registrations q129-q141 (the round-6
-# tests-first operators, the two streaming batch-twins, and the new
-# span-dedup guarantee row — q141 takes q03's seat; q03's string
-# filters stay exercised in-window by q02 and the composite shapes);
-# (d) bench watch item q57 (fresh row at a fixed window position for
-# the warm-vs-cold comparison). That is exactly 50.
-# Round-8 rotation (staleness budget: 4 recorded rounds, see
-# tests/test_registry.py; seats derived by scripts/plan_window.py with
-# the staged-first policy): (a) hard-mandatory q03 (displaced in r7);
-# (b) the 16 former-staged r7 registrations q142-q157, now @register —
-# the r7 verdict's top ask is a driver row for each; (c) the 33 oldest
-# expiring r5-last queries q01..q85. The 7 expiring queries that did
-# not fit (q86, q89, q91, q93, q94, q95, q98) become hard-mandatory in
-# round 9 — plan_window.py already accounts for them.
-# Round-9 rotation (plan_window.py at r9 start): (a) the 7 hard-
-# mandatory r5-last deferrals q86/q89/q91/q93/q94/q95/q98; (b) the 16
-# former-staged r8 registrations q158-q173, now @register (staged-first
-# policy: they have never had a driver row); (c) the q116 changed-code
-# re-seat — r8's bigram-LM join reorder (lm.py assembles the
-# probability table first, joins the corpus bigram stream once)
-# postdates q116's r6-banked row, same situation as r7's q82/q87; (d)
-# 26 of the oldest r6-last queries in registration order (q08..q104,
-# skipping none). The 23 r6-last queries that did not fit
-# (q105-q128 minus q116) become hard-mandatory in round 10 —
-# plan_window.py accounts for them.
-# Round-11 rotation (the r10 window never rotated — the driver recorded
-# r9's window twice — so r11 executes the combined plan from the r10
-# verdict ask #1): (a) the registry RETIRES the 12 rows annotated in
-# OPERATORS.md "Registry retirement candidates" (q02/q03/q04/q07/q09/
-# q13/q21/q38/q41/q42/q43/q63 move to @register_retired — operators,
-# oracles, pytest coverage, and §2 parity rows all stay; only the
-# driver seat is surrendered); (b) the staleness budget widens 4→5
-# recorded rounds (capacity 250 — the compensating control is the
-# full-registry DuckDB re-check both builder and judge ran green at
-# r10, FULLCHECK.json against_round=10; history in
-# tests/test_registry.py); (c) seats: the 23 r6-last hard-mandatory
-# rows (q105-q128 minus q116), the 25 round-9/-10 staged registrations
-# q174-q198 now @register (staged-first policy — never had a driver
-# row), and 2 changed-code re-seats: q50 (max_df change, commit
-# 9f9f453, judge-run evidence only) and q24 (the r10 bench watch item —
-# a fresh driver row at a fixed window position for the warm-vs-cold
-# comparison, same device as r7's q57 seat). 23+25+2 = 50 exactly.
-# Round-12 rotation (plan_window.py at r12 start; r11 verdict asks #1/#2):
-# (a) retirement TRANCHE 2 executes — the 11 rows annotated in
-# OPERATORS.md "retirement candidates, tranche 2" (q08/q10/q14/q23/
-# q29/q31/q47/q53/q61/q74/q104 move to @register_retired; operators,
-# oracles, pytest coverage, and §2 parity rows all stay; replay via
-# `scripts/check_oracle.py --retired`) — this cuts the r13/r14
-# hard-mandatory forecast from 48/50 to 44/43; (b) seats (50): all 11
-# staged registrations q199-q209 now @register (staged-first policy —
-# never had a driver row; this includes q209_hypertable_rollup, fixing
-# the r11 "10 staged / 48 seats" arithmetic the verdict flagged), the
-# 38 r7-last hard-mandatory rows (q05..q141 per plan_window.py), and
-# q01_pricing_summary (oldest expiring) in the spare seat — no
-# changed-code re-seat is needed because every r12 operator change
-# (repetition_stats gram selection, kmeans_fit input validation,
-# hypertable_rollup cast widening) lands inside a seated q199-q209
-# query. 11+38+1 = 50 exactly. The 47 deferred expiring rows become
-# hard-mandatory in r13 (44 after tranche-2 retirement).
-# Round-13 rotation (plan_window.py at r13 start; r12 verdict asks #2):
-# (a) retirement TRANCHE 3 executes — the 6 rows annotated in
-# OPERATORS.md "retirement candidates, tranche 3" (q22/q24/q25/q28/
-# q51/q82 move to @register_retired; operators, oracles, pytest
-# coverage, and §2 parity rows all stay; replay via
-# `scripts/check_oracle.py --retired`) — trimming q22 from the r13
-# hard-expiring set opens one spare seat, and dropping q24/q25/q28/
-# q51/q82 from the r12 window shrinks the 5-round-out (r17) mandatory
-# cycle; (b) seats (50): all 7 staged registrations q210-q216 now
-# @register (staged-first policy — never had a driver row; q214/q216
-# additionally carry this round's NULL-key join-back fixes and q215
-# the ACF decimal-precision fixes, so their first driver rows also
-# verify the changed code), the 42 remaining r8-last hard-mandatory
-# rows (q16..q157 per plan_window.py, minus retired q22), and
-# q26_knn_bruteforce (from the oldest remaining cohort — 41 rows
-# last recorded r10, mandatory r15) in the spare seat, smoothing the
-# r15 bulge. 7+42+1 = 50 exactly. plan_window.py after this rotation:
-# r14 = 0 hard-mandatory / 0 expiring / +50 spare.
-# Round-14 rotation (plan_window.py at r14 start; r13 verdict ask #1):
-# 0 hard-mandatory / 0 expiring this round, 11 staged — so the window
-# seats all 11 staged q217-q227 (staged-first policy: none has ever
-# had a driver row) plus the largest early-seat slice of the r10-last
-# cohort (41 rows, mandatory r15) the spare seats allow: 39 of 41,
-# deferring q172/q173 (hard-mandatory r15 — recoverable: r15 load
-# becomes 2 hard + whatever stages this round). 39+11 = 50 exactly.
-# Round-15 rotation (plan_window.py at r15 start; r14 verdict asks
-# #1/#3): the window is OVER capacity — 2 hard-mandatory (q172/q173)
-# + 49 expiring + 27 staged + the 2 force-seats = 80 candidates for
-# 50 seats. Seats: (a) FORCE-SEATS q221/q223 — the r14 driver hash
-# failures (the registry's only DecimalType-emitting rows; fixed this
-# round: psi_term now decimal-grid-rounds then emits double at
-# quality.py::psi_from_counts / categorical_psi, oracles double-cast
-# to match) — their green rows are the proof the fix landed; (b) the
-# 2 hard-mandatory deferrals q172/q173; (c) all 27 staged q228-q254,
-# now @register (staged-first policy: never had a driver row; q254
-# additionally carries the categorical_psi double-emission fix, q238
-# the Wasserstein one-sided-group guard, q253 the two-proportion NaN
-# guard — their first driver rows also verify the changed code);
-# (d) the 19 oldest expiring r11-last rows the remaining seats allow
-# (q50, q105-q115, q117-q123 per plan_window.py order, minus the two
-# seats surrendered to the force-seats: q124/q125 defer). 2+2+27+19 =
-# 50 exactly. The 30 deferred expiring rows (q124-q128, q174-q198)
-# become hard-mandatory in r16 — recoverable because r15 staging is
-# CAPPED (~5 rows, r14 verdict ask #4): r16 ≈ 30 hard + ~5 staged =
-# ~35 ≤ 50.
-# Round-16 rotation (plan_window.py at r16 start; r15 verdict ask #1):
-# OVER capacity again — 30 hard-mandatory (the r15 deferrals
-# q124-q128, q174-q198) + 47 expiring + 5 staged = 82 candidates for
-# 50 seats. Seats: (a) the 30 hard-mandatory rows; (b) all 5 staged
-# q255-q259, now @register (staged-first policy: never had a driver
-# row; q256/q257 additionally carry this round's NULL-token and
-# manifest-ordering fixes — their first driver rows verify the
-# changed code); (c) the 15 oldest expiring rows plan_window's
-# ordering allows (q01..q52). 30+5+15 = 50 exactly. The 32 deferred
-# expiring rows (q57..q209) become hard-mandatory in r17 —
-# recoverable because r16 staging stays capped (~2 rows):
-# r17 ≈ 32 hard + ~2 staged = ~34 ≤ 50.
-_WINDOW: list[str] = [
-    "q16_sessionize",
-    "q26_knn_bruteforce",
-    "q32_pipeline_runner",
-    "q35_asof_join",
-    "q36_range_join",
-    "q48_stateful_stream",
-    "q54_redact_pii",
-    "q55_shipping_priority",
-    "q56_local_supplier_volume",
-    "q57_streaming_dedup",
-    "q58_stream_stream_join",
-    "q59_ann_lsh",
-    "q60_fanin_heterogeneous",
-    "q62_pivot",
-    "q64_fuzzy_pairs",
-    "q65_json_extract",
-    "q66_forecast_revenue",
-    "q67_io_stats",
-    "q68_salted_join",
-    "q69_bucketed_join",
-    "q79_csv_roundtrip",
-    "q80_jsonl_roundtrip",
-    "q87_tdigest_by_group",
-    "q129_robust_scale",
-    "q130_mode_by_group",
-    "q131_mad",
-    "q132_quantile_normalize",
-    "q133_sorted_neighborhood",
-    "q134_sentence_stats",
-    "q135_pagerank",
-    "q136_wordpiece",
-    "q137_hard_negatives",
-    "q138_sliding_distinct",
-    "q139_funnel_stream",
-    "q140_zscore_stream",
-    "q141_duplicate_spans",
-    "q199_repetition_flags",
-    "q200_dsir_select",
-    "q201_chat_turns",
-    "q202_block_pack",
-    "q203_vocab_coverage",
-    "q204_min_cost_supplier",
-    "q205_product_profit",
-    "q206_important_parts",
-    "q207_excess_suppliers",
-    "q208_kmeans",
-    "q209_hypertable_rollup",
-    "q260_grouped_c2st",
-    "q261_stream_index_append",
-    "q262_two_monitor_c2st",
+# The external correctness gate checks the first 50 keys of queries() and
+# records them in CORRECTNESS_r*.json. Queries with no row in any of those
+# artifacts lead; the rest follow in registration order. Every query is
+# re-verified against DuckDB by scripts/check_oracle.py, which records the
+# code hash it ran at.
+_NEW_QUERIES: list[str] = [
+    "q263_two_monitor_grouped_c2st",
+    "q264_semantic_index",
+    "q265_hll_stream",
 ]
 
 
 def _ordered() -> dict[str, tuple[QueryFn, str | None]]:
-    head = {n: _REGISTRY[n] for n in _WINDOW if n in _REGISTRY}
+    head = {n: _REGISTRY[n] for n in _NEW_QUERIES}
     tail = {n: v for n, v in _REGISTRY.items() if n not in head}
     return {**head, **tail}
 
@@ -405,33 +183,7 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 # §2.3 filters: combinators, between, in, regex, not_null
 # ---------------------------------------------------------------------------
 
-@register_retired(
-    "q02_filter_combinators",
-    """
-    SELECT l_orderkey, l_linenumber, l_quantity, l_discount, l_returnflag
-    FROM lineitem
-    WHERE l_quantity BETWEEN 10 AND 20
-      AND l_returnflag IN ('A', 'R')
-      AND (l_discount > 0.05 OR l_tax < 0.02)
-      AND NOT (l_linestatus = 'O')
-    """,
-)
-def q02_filter_combinators(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """filter.Between/In/And/Or/Not (filter/filters.go:158-232) — all as
-    pushable Column predicates."""
-    li = _t(spark, sf_dir, "lineitem")
-    pred = flt.all_of(
-        flt.between("l_quantity", 10, 20),
-        flt.is_in("l_returnflag", ["A", "R"]),
-        flt.any_of(flt.greater_than("l_discount", 0.05), flt.less_than("l_tax", 0.02)),
-        flt.not_(flt.equals("l_linestatus", "O")),
-    )
-    return li.filter(pred).select(
-        "l_orderkey", "l_linenumber", "l_quantity", "l_discount", "l_returnflag"
-    )
-
-
-@register_retired(
+@register(
     "q03_filter_strings",
     """
     SELECT c_custkey, c_name, c_mktsegment
@@ -456,34 +208,6 @@ def q03_filter_strings(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # §2.4 joins
 # ---------------------------------------------------------------------------
-
-@register_retired(
-    "q04_join_inner",
-    f"""
-    SELECT c.c_custkey, c.c_name,
-           COUNT(*) AS order_count,
-           {DSUM('o.o_totalprice')} AS total_spent
-    FROM customer c
-    JOIN orders o ON c.c_custkey = o.o_custkey
-    WHERE o.o_orderstatus = 'F'
-    GROUP BY c.c_custkey, c.c_name
-    ORDER BY c.c_custkey
-    """,
-)
-def q04_join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inner equi-join + agg (dag/tasks/join.go:106-169). Catalyst picks the
-    physical join (broadcast at small SF, sort-merge at scale via AQE)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    cfg = JoinConfig(join_type="inner", left_keys=["c_custkey"], right_keys=["o_custkey"])
-    j = join(c, o, cfg)
-    return (
-        j.groupBy("c_custkey", "c_name")
-        .agg(F.count(F.lit(1)).alias("order_count"),
-             dsum("o_totalprice", "total_spent"))
-        .orderBy("c_custkey")
-    )
-
 
 @register(
     "q05_join_left_nulls",
@@ -540,32 +264,7 @@ def q06_join_multiway_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
 # §2.5 global aggregate, §2.6 top-k / distinct / union
 # ---------------------------------------------------------------------------
 
-@register_retired(
-    "q07_global_agg",
-    f"""
-    SELECT COUNT(*) AS n_rows,
-           {DSUM('l_quantity')} AS total_qty,
-           CAST(MIN(l_extendedprice) AS DOUBLE) AS min_price,
-           CAST(MAX(l_extendedprice) AS DOUBLE) AS max_price,
-           {DSUM('l_extendedprice')} / COUNT(l_extendedprice) AS avg_price
-    FROM lineitem
-    """,
-)
-def q07_global_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global (no-group) aggregation → single row (AggregateTask,
-    dag/tasks/transform.go:163-200), via the GroupBy façade with no keys."""
-    li = _t(spark, sf_dir, "lineitem")
-    return li.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        dsum("l_quantity", "total_qty"),
-        F.min("l_extendedprice").alias("min_price"),
-        F.max("l_extendedprice").alias("max_price"),
-        (F.sum(F.col("l_extendedprice").cast("decimal(38,6)")).cast("double")
-         / F.count("l_extendedprice")).alias("avg_price"),
-    )
-
-
-@register_retired(
+@register(
     "q08_topk",
     """
     SELECT o_orderkey, o_custkey, o_totalprice
@@ -583,41 +282,6 @@ def q08_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
         .limit(10)
     )
-
-
-@register_retired(
-    "q09_union_fanin",
-    """
-    SELECT name, acctbal, kind FROM (
-        SELECT c_name AS name, c_acctbal AS acctbal, 'customer' AS kind FROM customer
-        UNION ALL
-        SELECT s_name AS name, s_acctbal AS acctbal, 'supplier' AS kind FROM supplier
-    )
-    """,
-)
-def q09_union_fanin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fan-in UNION ALL by name (dag/dag_executor.go:352-376)."""
-    c = _t(spark, sf_dir, "customer").select(
-        F.col("c_name").alias("name"), F.col("c_acctbal").alias("acctbal"),
-        F.lit("customer").alias("kind"),
-    )
-    s = _t(spark, sf_dir, "supplier").select(
-        F.col("s_name").alias("name"), F.col("s_acctbal").alias("acctbal"),
-        F.lit("supplier").alias("kind"),
-    )
-    return fan_in([c, s])
-
-
-@register_retired(
-    "q10_distinct",
-    """
-    SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders
-    """,
-)
-def q10_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct (beyond reference, SURVEY §2.6 'not present')."""
-    o = _t(spark, sf_dir, "orders")
-    return distinct(o.select("o_orderstatus", "o_orderpriority"))
 
 
 # ---------------------------------------------------------------------------
@@ -686,7 +350,7 @@ def q12_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
 # §2.6 window functions (beyond reference; SURVEY roadmap item)
 # ---------------------------------------------------------------------------
 
-@register_retired(
+@register(
     "q13_window_topn",
     """
     SELECT o_custkey, o_orderkey, o_totalprice, rn, prev_price
@@ -710,34 +374,6 @@ def q13_window_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = W.with_row_number(o, ["o_custkey"], order, out="rn")
     return o.filter(F.col("rn") <= 3).select(
         "o_custkey", "o_orderkey", "o_totalprice", "rn", "prev_price"
-    )
-
-
-@register_retired(
-    "q14_window_running",
-    """
-    SELECT o_custkey, o_orderkey,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6)))
-                OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                AS DOUBLE) AS running_spend
-    FROM orders
-    """,
-)
-def q14_window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Running per-customer spend: frame-based analytic window
-    (operators/window.py::with_running). Decimal accumulation keeps the
-    prefix sums order-exact vs the oracle."""
-    from goetl_spark.operators import window as W
-
-    o = _t(spark, sf_dir, "orders")
-    o = W.with_running(
-        o,
-        F.sum(F.col("o_totalprice").cast("decimal(38,6)")),
-        ["o_custkey"], ["o_orderdate", "o_orderkey"], "running_spend",
-    )
-    return o.select(
-        "o_custkey", "o_orderkey", F.col("running_spend").cast("double").alias("running_spend")
     )
 
 
@@ -975,11 +611,10 @@ def q20_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Dedup family (north star): exact, n-gram Jaccard, MinHash+LSH, SimHash
+# Dedup family (north star): DuckDB twins of the md5-based hash + shingle
+# expressions in operators/text.py and operators/dedup.py
 # ---------------------------------------------------------------------------
 
-# DuckDB twins of the md5-based hash + shingle builders in operators/text.py
-# and operators/dedup.py
 _DUCK_MD5INT = "CAST(('0x' || substr(md5({expr}), 1, 8)) AS BIGINT)"
 _DUCK_SHINGLES = """
     toks AS (SELECT doc_id, string_split_regex(text, '\\s+') AS t FROM documents),
@@ -993,138 +628,6 @@ _DUCK_SHINGLES = """
     ),
     ex AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh)
 """
-
-
-@register_retired(
-    "q21_dedup_exact",
-    """
-    SELECT md5(text) AS content_hash, MIN(doc_id) AS keep_id, COUNT(*) AS n_copies
-    FROM documents GROUP BY md5(text)
-    """,
-)
-def q21_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup by content digest (operators/dedup.py::exact_dedup)."""
-    from goetl_spark.operators.dedup import exact_dedup
-
-    return exact_dedup(_t(spark, sf_dir, "documents"))
-
-
-@register_retired(
-    "q22_ngram_jaccard",
-    f"""
-    WITH {_DUCK_SHINGLES},
-    keep AS (SELECT shingle FROM ex GROUP BY shingle HAVING COUNT(*) <= 64),
-    exf AS (SELECT ex.doc_id, ex.shingle FROM ex JOIN keep USING (shingle)),
-    sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM exf GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_common
-        FROM exf a JOIN exf b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT id_a, id_b, n_common,
-           CAST(n_common AS DOUBLE) / (sa.n_sh + sb.n_sh - n_common) AS jaccard
-    FROM inter
-    JOIN sizes sa ON sa.doc_id = id_a
-    JOIN sizes sb ON sb.doc_id = id_b
-    WHERE CAST(n_common AS DOUBLE) / (sa.n_sh + sb.n_sh - n_common) >= 0.1
-    """,
-)
-def q22_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact 3-gram-shingle Jaccard near-dup pairs via inverted-index join
-    (operators/dedup.py::ngram_jaccard_pairs), with the max_df=64
-    hot-shingle cap mirrored in the oracle's HAVING clause (a no-op on
-    this corpus — max document frequency is 7 — but the semantics are
-    locked both sides)."""
-    from goetl_spark.operators.dedup import ngram_jaccard_pairs
-
-    return ngram_jaccard_pairs(_t(spark, sf_dir, "documents"),
-                               threshold=0.1, max_df=64)
-
-
-@register_retired(
-    "q23_minhash_signatures",
-    f"""
-    WITH {_DUCK_SHINGLES},
-    hashed AS (
-        SELECT doc_id, {_DUCK_MD5INT.format(expr='shingle')} AS h FROM ex
-    ),
-    params AS (
-        SELECT CAST(i AS INT) AS i, 1 + 3 * i AS a, 7 + 11 * i AS b
-        FROM (SELECT unnest(range(32)) AS i)
-    )
-    SELECT doc_id, i, MIN((a * h + b) % 2147483647) AS sig
-    FROM hashed CROSS JOIN params
-    GROUP BY doc_id, i
-    """,
-)
-def q23_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash signatures, 32 hash functions over 3-gram shingles
-    (operators/dedup.py::minhash_signatures)."""
-    from goetl_spark.operators.dedup import minhash_signatures
-
-    return minhash_signatures(_t(spark, sf_dir, "documents"))
-
-
-@register_retired(
-    "q24_minhash_lsh_candidates",
-    f"""
-    WITH {_DUCK_SHINGLES},
-    hashed AS (
-        SELECT doc_id, {_DUCK_MD5INT.format(expr='shingle')} AS h FROM ex
-    ),
-    params AS (
-        SELECT CAST(i AS INT) AS i, 1 + 3 * i AS a, 7 + 11 * i AS b
-        FROM (SELECT unnest(range(32)) AS i)
-    ),
-    sig AS (
-        SELECT doc_id, i, MIN((a * h + b) % 2147483647) AS sig
-        FROM hashed CROSS JOIN params GROUP BY doc_id, i
-    ),
-    bands AS (
-        SELECT doc_id, CAST(i // 4 AS INT) AS band,
-               md5(string_agg(i || ':' || sig, ',' ORDER BY i || ':' || sig)) AS band_hash
-        FROM sig GROUP BY doc_id, CAST(i // 4 AS INT)
-    )
-    SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-    FROM bands a JOIN bands b
-      ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
-    """,
-)
-def q24_minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Banded-LSH candidate pairs (operators/dedup.py::minhash_lsh_candidates)."""
-    from goetl_spark.operators.dedup import minhash_lsh_candidates
-
-    return minhash_lsh_candidates(_t(spark, sf_dir, "documents"))
-
-
-@register_retired(
-    "q25_simhash",
-    """
-    WITH toks AS (
-        SELECT doc_id, unnest(list_distinct(string_split_regex(text, '\\s+'))) AS tok
-        FROM documents
-    ),
-    hashed AS (
-        SELECT doc_id, CAST(('0x' || substr(md5(tok), 1, 15)) AS BIGINT) AS h
-        FROM toks
-    ),
-    bitsum AS (
-        SELECT doc_id, j,
-               SUM(CASE WHEN (h >> j) & 1 = 1 THEN 1 ELSE -1 END) AS cnt
-        FROM hashed CROSS JOIN (SELECT CAST(unnest(range(60)) AS INT) AS j)
-        GROUP BY doc_id, j
-    )
-    SELECT doc_id,
-           CAST(SUM(CASE WHEN cnt > 0 THEN (CAST(1 AS BIGINT) << j)
-                         ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS simhash
-    FROM bitsum GROUP BY doc_id
-    """,
-)
-def q25_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """60-bit SimHash per document (operators/dedup.py::simhash)."""
-    from goetl_spark.operators.dedup import simhash
-
-    return simhash(_t(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -1200,26 +703,6 @@ def q27_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("query_id", "neighbor_id", "cos_sim", "rank")
 
 
-@register_retired(
-    "q28_embedding_neardup",
-    f"""
-    WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev, label FROM embeddings)
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           {_DUCK_COS.format(a='a.ev', b='b.ev')} AS cos_sim
-    FROM v a JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
-    WHERE {_DUCK_COS.format(a='a.ev', b='b.ev')} >= 0.35
-    """,
-)
-def q28_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs with label-bucket blocking
-    (operators/similarity.py::embedding_neardup_pairs)."""
-    from goetl_spark.operators.similarity import embedding_neardup_pairs
-
-    return embedding_neardup_pairs(
-        _t(spark, sf_dir, "embeddings"), threshold=0.35, bucket_col="label"
-    )
-
-
 # ---------------------------------------------------------------------------
 # Text analysis family (north star)
 # ---------------------------------------------------------------------------
@@ -1229,49 +712,6 @@ _SW = {
     for k, v in
     __import__("goetl_spark.operators.text", fromlist=["STOPWORDS"]).STOPWORDS.items()
 }
-
-
-@register_retired(
-    "q29_text_stats",
-    f"""
-    WITH t AS (
-        SELECT doc_id, text, string_split_regex(text, '\\s+') AS toks FROM documents
-    ), scored AS (
-        SELECT doc_id,
-               len(toks) AS n_tokens,
-               len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS n_tokens_bpe,
-               len(list_filter(toks, x -> lower(x) IN ({_SW['en']}))) AS s_en,
-               len(list_filter(toks, x -> lower(x) IN ({_SW['es']}))) AS s_es,
-               len(list_filter(toks, x -> lower(x) IN ({_SW['fr']}))) AS s_fr,
-               len(list_filter(toks, x -> lower(x) IN ({_SW['de']}))) AS s_de,
-               list_min(list_transform(
-                   range(1, greatest(length(text) - 4, 1) + 1),
-                   i -> CAST(('0x' || substr(md5(substr(text, i, 5)), 1, 8)) AS BIGINT)
-               )) AS fingerprint
-        FROM t
-    )
-    SELECT doc_id, n_tokens, n_tokens_bpe,
-           CASE WHEN s_en >= s_es AND s_en >= s_fr AND s_en >= s_de THEN 'en'
-                WHEN s_es >= s_fr AND s_es >= s_de THEN 'es'
-                WHEN s_fr >= s_de THEN 'fr'
-                ELSE 'de' END AS lang_pred,
-           fingerprint
-    FROM scored
-    """,
-)
-def q29_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token counts (whitespace + BPE-ish regex), heuristic language ID,
-    rolling-hash fingerprint (operators/text.py)."""
-    from goetl_spark.operators import text as X
-
-    d = _t(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        X.token_count("text").alias("n_tokens"),
-        X.bpe_ish_token_count("text").alias("n_tokens_bpe"),
-        X.detect_language("text").alias("lang_pred"),
-        X.fingerprint("text").alias("fingerprint"),
-    )
 
 
 @register(
@@ -1319,48 +759,6 @@ def q30_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Streaming / runner / multimodal — the engine-level operators as queries
 # ---------------------------------------------------------------------------
-
-@register_retired(
-    "q31_streaming_tumbling",
-    f"""
-    SELECT date_trunc('hour', ts) AS window_start, event_type,
-           COUNT(*) AS n_events, {DSUM('value')} AS total_value
-    FROM events
-    GROUP BY 1, 2
-    """,
-)
-def q31_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ACTUAL Structured Streaming execution: the events table is replayed
-    as a throttled file stream, aggregated with a tumbling event-time
-    window + watermark, and the completed result is compared against the
-    batch oracle — streaming/batch unification made checkable
-    (goetl roadmap item, README.md:654-658; goetl_spark.streaming)."""
-    import tempfile
-
-    from goetl_spark.streaming import (
-        replay_stream, state_partitions, tumbling_window_agg)
-
-    e = _t(spark, sf_dir, "events").select("ts", "event_type", "value")
-    stream = replay_stream(e, num_chunks=4, max_files_per_trigger=2,
-                           dir=_scratch("goetl_q31_replay"))
-    agg = tumbling_window_agg(
-        stream, "ts", "1 hour",
-        [F.count(F.lit(1)).alias("n_events"), dsum("value", "total_value")],
-        keys=["event_type"], watermark="1 minute",
-    )
-    name = "goetl_q31_result"
-    with state_partitions(spark, 4):
-        q = (agg.writeStream.format("memory").queryName(name)
-             .outputMode("complete").start())
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(name).select(
-        F.col("window.start").alias("window_start"),
-        "event_type", "n_events", "total_value",
-    )
-
 
 @register(
     "q32_pipeline_runner",
@@ -1596,7 +994,7 @@ def q37_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_orders"), dsum("o_totalprice", "revenue"))
 
 
-@register_retired(
+@register(
     "q38_percentiles",
     """
     SELECT l_returnflag,
@@ -1681,43 +1079,7 @@ def q40_scd1(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scd_type1(src, dim)
 
 
-@register_retired(
-    "q41_semi_join",
-    """
-    SELECT c_custkey, c_mktsegment FROM customer c
-    WHERE c_mktsegment = 'AUTOMOBILE'
-      AND EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-    """,
-)
-def q41_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left-semi join (beyond-reference §2.4 'not present' row): customers
-    with at least one order, no right-side columns, no row duplication —
-    the EXISTS shape. Semi joins shuffle only the keys of the right side."""
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "AUTOMOBILE")
-    o = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("c_custkey"))
-    return semi_join(c, o, ["c_custkey"]).select("c_custkey", "c_mktsegment")
-
-
-@register_retired(
-    "q42_anti_join",
-    """
-    SELECT c_custkey, c_acctbal FROM customer c
-    WHERE NOT EXISTS (SELECT 1 FROM orders o
-                      WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F')
-    """,
-)
-def q42_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left-anti join (TPC-H Q22 flavor): customers with no finalized
-    ('F') order — the NOT EXISTS shape. The status filter pushes into the
-    orders scan before the anti join's key shuffle."""
-    c = _t(spark, sf_dir, "customer")
-    o = (_t(spark, sf_dir, "orders")
-         .filter(F.col("o_orderstatus") == "F")
-         .select(F.col("o_custkey").alias("c_custkey")))
-    return anti_join(c, o, ["c_custkey"]).select("c_custkey", "c_acctbal")
-
-
-@register_retired(
+@register(
     "q43_cube",
     """
     SELECT c_mktsegment, o_orderstatus, COUNT(*) AS n_orders,
@@ -1918,33 +1280,6 @@ def q50_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_clusters(pairs)
 
 
-@register_retired(
-    "q51_write_roundtrip",
-    f"""
-    SELECT l_linestatus, COUNT(*) AS n, {DSUM('l_extendedprice')} AS sum_price
-    FROM lineitem WHERE l_returnflag = 'R'
-    GROUP BY l_linestatus
-    """,
-)
-def q51_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Write path + partition pruning, oracle-checked: lineitem written as
-    parquet partitioned by l_returnflag (sinks/files.py::write_parquet),
-    read back with a partition filter — the scan touches only the 'R'
-    directory (PartitionFilters in the plan), and the aggregate must match
-    the oracle on the ORIGINAL table, proving the round-trip lossless."""
-    import tempfile
-
-    from goetl_spark.sinks.files import write_parquet
-
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_returnflag", "l_linestatus", "l_extendedprice")
-    out = _scratch("goetl_q51_out")
-    write_parquet(li, out, partition_by=["l_returnflag"])
-    back = spark.read.parquet(out).filter(F.col("l_returnflag") == "R")
-    return back.groupBy("l_linestatus").agg(
-        F.count(F.lit(1)).alias("n"), dsum("l_extendedprice", "sum_price"))
-
-
 @register(
     "q52_hash_split",
     """
@@ -1973,33 +1308,6 @@ def q52_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.groupBy("split").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(token_count("text")).alias("total_tokens"),
-    )
-
-
-@register_retired(
-    "q53_length_buckets",
-    """
-    WITH t AS (
-        SELECT len(string_split_regex(text, '\\s+')) AS n FROM documents
-    )
-    SELECT CASE WHEN n <= 64 THEN 0 WHEN n <= 128 THEN 1 WHEN n <= 256 THEN 2
-                WHEN n <= 512 THEN 3 WHEN n <= 1024 THEN 4 ELSE 5 END AS length_bucket,
-           COUNT(*) AS n_docs, MIN(n) AS min_tokens, MAX(n) AS max_tokens
-    FROM t GROUP BY 1
-    """,
-)
-def q53_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-length bucketing for training-batch packing
-    (operators/sampling.py::length_buckets): per-doc bucket id as a pure
-    expression; batches then pack by bucket with minimal padding."""
-    from goetl_spark.operators.sampling import length_buckets
-    from goetl_spark.operators.text import token_count
-
-    d = _t(spark, sf_dir, "documents")
-    return length_buckets(d).groupBy("length_bucket").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.min(token_count("text")).alias("min_tokens"),
-        F.max(token_count("text")).alias("max_tokens"),
     )
 
 
@@ -2214,44 +1522,6 @@ def q60_fanin_heterogeneous(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fan_in([c, s]).select("name", "segment", "kind", "acctbal")
 
 
-@register_retired(
-    "q61_mix_sources",
-    """
-    WITH b AS (SELECT doc_id, text FROM documents
-               WHERE doc_id % 2 = 1
-                 AND CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-                     % 10000 < 3000),
-    u AS (
-        SELECT doc_id, text, 0 AS source FROM documents WHERE doc_id % 2 = 0
-        UNION ALL
-        SELECT doc_id, text, 1 AS source FROM b
-    )
-    SELECT source, COUNT(*) AS n_docs,
-           CAST(SUM(len(string_split_regex(text, '\\s+'))) AS BIGINT) AS total_tokens
-    FROM u GROUP BY source
-    """,
-)
-def q61_mix_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted corpus mixture (operators/sampling.py::mix_sources): two
-    sources — even doc_ids at weight 1.0, odd at 0.3 — hash-sampled per
-    row and unioned by name. Membership is the md5-bucket rule, so the
-    mixture is reproducible across engines and incremental rebuilds keep
-    prior rows; the union itself is shuffle-free."""
-    from goetl_spark.operators.sampling import mix_sources
-    from goetl_spark.operators.text import token_count
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    mixed = mix_sources(
-        [(d.filter(F.col("doc_id") % 2 == 0), 1.0),
-         (d.filter(F.col("doc_id") % 2 == 1), 0.3)],
-        key_col="doc_id",
-    )
-    return mixed.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(token_count("text")).cast("long").alias("total_tokens"),
-    )
-
-
 @register(
     "q62_pivot",
     f"""
@@ -2279,7 +1549,7 @@ def q62_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_retired(
+@register(
     "q63_unpivot",
     f"""
     SELECT l_returnflag, 'l_quantity' AS metric, {DSUM('l_quantity')} AS total
@@ -2678,43 +1948,6 @@ def q73_ann_ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("query_id", "neighbor_id", "cos_sim", "rank")
 
 
-@register_retired(
-    "q74_bloom_join",
-    f"""
-    SELECT l_returnflag, COUNT(*) AS n_items, {DSUM('l_extendedprice')} AS total_price
-    FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-      AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-    GROUP BY l_returnflag
-    """,
-)
-def q74_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-pruned join parity (operators/bloom.py::bloom_prune): the
-    fact side is pre-filtered by a bloom filter built from the filtered
-    orders keys, then joined — the oracle is the PLAIN join, proving the
-    superset gate changes nothing (false positives die in the join; false
-    negatives impossible). Kept as a parity/registry query only: at
-    local[32]/sf0.1 the pruned join measures SLOWER than the plain one
-    (0.59 s → 1.06 s + build) because local shuffle is memory-speed —
-    the operator docstring records the numbers; the win case is network
-    shuffle / reused filters / row-group skipping at cluster scale."""
-    from goetl_spark.operators.bloom import bloom_prune
-
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_returnflag", "l_extendedprice")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    o = o.filter((F.col("o_orderdate") >= _ts_lit(o, "o_orderdate", "1996-01-01"))
-                 & (F.col("o_orderdate") < _ts_lit(o, "o_orderdate", "1997-01-01")))
-    pruned = bloom_prune(li, o.select("o_orderkey"), "l_orderkey",
-                         "o_orderkey", fpp=0.01)
-    return (
-        pruned.join(o, pruned.l_orderkey == o.o_orderkey)
-        .groupBy("l_returnflag")
-        .agg(F.count(F.lit(1)).alias("n_items"),
-             dsum("l_extendedprice", "total_price"))
-    )
-
-
 @register(
     "q75_zorder_scan",
     f"""
@@ -3108,7 +2341,7 @@ def q58_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_retired(
+@register(
     "q47_approx_distinct",
     """
     SELECT o_orderstatus,
@@ -3891,53 +3124,6 @@ def q98_strip_html(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", normalize_whitespace(strip_html("html")).alias("text"))
 
 
-_TDIGEST_PROBS = [0.01, 0.05, 0.25, 0.50, 0.75, 0.95, 0.99]
-
-
-@register_retired(
-    "q82_tdigest_bound",
-    f"""
-    WITH exact(p, v) AS (
-        {' UNION ALL '.join(
-            f'SELECT {p}, quantile_cont(l_extendedprice, {p}) FROM lineitem'
-            for p in _TDIGEST_PROBS)}
-    )
-    SELECT CAST(p AS DOUBLE) AS prob,
-           (ABS((SELECT AVG(CASE WHEN l_extendedprice <= e.v
-                            THEN 1.0 ELSE 0.0 END) FROM lineitem) - p)
-            <= 0.01) AS within_bound
-    FROM exact e ORDER BY prob
-    """,
-)
-def q82_tdigest_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-visible accuracy contract for the mergeable t-digest sketch
-    (operators/sketch.py — round-3 verdict ask #7). The approximate
-    quantile VALUES are engine-specific (no SQL twin exists), but the
-    RANK-ERROR BOUND is oracle-able: for each probe p, the empirical rank
-    of the digest's estimate must sit within 0.01 of p. The oracle runs
-    the same rank check on DuckDB's exact quantile_cont — pinning both
-    the 0.01 contract and the rank convention (P(X <= v)); a drifting
-    digest flips within_bound to false and hash-mismatches.
-
-    At 100 TB: one scan for the sketch (mapInPandas, ≤ 2·compression
-    centroids per partition), one scan for the rank check — no sort, no
-    shuffle, driver merge bounded by #partitions × compression."""
-    from goetl_spark.operators.sketch import approx_quantiles
-
-    li = _t(spark, sf_dir, "lineitem").select("l_extendedprice")
-    est = approx_quantiles(li, "l_extendedprice", _TDIGEST_PROBS,
-                           compression=100)
-    ranks = li.agg(*[
-        F.avg(F.when(F.col("l_extendedprice") <= v, 1.0).otherwise(0.0))
-        .alias(f"r{i}")
-        for i, v in enumerate(est)
-    ]).collect()[0]
-    rows = [(float(p), bool(abs(ranks[f"r{i}"] - p) <= 0.01))
-            for i, p in enumerate(_TDIGEST_PROBS)]
-    return spark.createDataFrame(rows, "prob double, within_bound boolean") \
-        .orderBy("prob")
-
-
 _Q87_PROBS = [0.25, 0.50, 0.75, 0.95]
 
 
@@ -4216,32 +3402,6 @@ def q103_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (join_cardinality(o, c, ["c_custkey"])
             .orderBy(F.col("pairs").desc(), F.col("c_custkey"))
             .limit(20))
-
-
-@register_retired(
-    "q104_vocabulary",
-    """
-    SELECT token, CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df_docs
-    FROM (SELECT doc_id,
-                 unnest(list_filter(regexp_split_to_array(lower(text),
-                     '[^a-z0-9]+'), x -> x <> '')) AS token
-          FROM documents)
-    GROUP BY token ORDER BY n DESC, token LIMIT 30
-    """,
-)
-def q104_vocabulary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus vocabulary builder (operators/text.py::vocabulary): top-30
-    tokens with total occurrences and document frequency — the input to
-    stopword discovery, BPE-merge seeding, and standing idf tables.
-    Same tokenizer as q102's BM25. One explode + ONE partially-
-    aggregated groupBy: counts combine map-side, so the shuffle carries
-    per-partition vocabularies, never corpus tokens."""
-    from goetl_spark.operators.text import vocabulary
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return (vocabulary(d)
-            .orderBy(F.col("n").desc(), F.col("token")).limit(30))
 
 
 @register(
@@ -6038,55 +5198,6 @@ def q141_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ENTRY_QUERY = q01_pricing_summary
-
-
-# ---------------------------------------------------------------------------
-# STAGED registrations — new operators land here tests-first when the
-# current round's window is already full: an unseated registration with
-# no driver row would trip test_registry's coverage invariant. Staged
-# entries are fully written and oracle-verified immediately
-# (tests/test_staged_oracles.py runs the driver's own compare at
-# sf0.001; scripts/check_oracle.py --staged replays them at any SF), so
-# each rotation is a pure window edit: move the entry to @register and
-# seat it. The 16 round-7 staged entries (q142-q157) were seated at the
-# round-8 rotation; the 16 round-8 staged entries (q158-q173) were
-# seated at the round-9 rotation; the 25 round-9/-10 staged entries
-# (q174-q198) were seated at the round-11 rotation (the r10 rotation
-# never ran); the 11 round-13 staged entries (q217-q227) were seated
-# at the round-14 rotation; the 27 round-14 staged entries (q228-q254)
-# were seated at the round-15 rotation; the 5 round-15 staged entries
-# (q255-q259) were seated at the round-16 rotation; the 3 round-16
-# staged entries (q260-q262) were seated at the round-17 rotation.
-# r17 staging holds exactly 3: q263_two_monitor_grouped_c2st
-# (stream_c2st_monitor x 2 keyed [group]+cats composed through
-# c2st_from_counts_by — the r16 verdict ask #4, the grouped twin of
-# q262's topology, with the q260-style per-lang SQL oracle and the
-# degenerate dropped-group convention riding the streamed path) and
-# q264_semantic_index (the standing SemDeDup leg — r16 verdict depth
-# candidate (a): semantic_index_write/candidates lifecycle at FULL
-# probe vs the naive cosine-threshold cross-join oracle, the q259
-# exactness pattern applied to threshold search) and q265_hll_stream
-# (the 'hll' kind of stream_index_append — q185's streamed twin with
-# the q47 bound-check oracle over chunk-invariant columns). All three
-# seat r18 alongside the expiring cohort.
-# ---------------------------------------------------------------------------
-
-_STAGED: dict[str, tuple[QueryFn, str | None]] = {}
-
-
-def register_staged(name: str, oracle: str | None):
-    def deco(fn: QueryFn) -> QueryFn:
-        _STAGED[name] = (fn, oracle)
-        return fn
-    return deco
-
-
-def staged_queries() -> dict[str, QueryFn]:
-    return {name: fn for name, (fn, _) in _STAGED.items()}
-
-
-def staged_oracle_sql() -> dict[str, str]:
-    return {name: sql for name, (_, sql) in _STAGED.items() if sql is not None}
 
 
 _GOPHER_SW_SQL = " + ".join(
@@ -13740,7 +12851,7 @@ def q262_two_monitor_c2st(spark: SparkSession, sf_dir: str) -> DataFrame:
                             spark.read.parquet(outs[1]), cats)
 
 
-@register_staged(
+@register(
     "q263_two_monitor_grouped_c2st",
     """
     WITH t AS (
@@ -13877,7 +12988,7 @@ def q263_two_monitor_grouped_c2st(spark: SparkSession,
             .orderBy("lang"))
 
 
-@register_staged(
+@register(
     "q264_semantic_index",
     f"""
     WITH q AS (
@@ -13940,7 +13051,7 @@ def q264_semantic_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("query_id", "match_id"))
 
 
-@register_staged(
+@register(
     "q265_hll_stream",
     """
     SELECT event_type,

@@ -28,25 +28,13 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 # ops that execute eagerly inside the query fn (streaming replays); their
 # returned DataFrame is a memory-sink read, so the plan is not the work
-EAGER = {"q31_streaming_tumbling", "q48_stateful_stream"}
-
-
-def _lazy_q22(spark, sf_dir):
-    """q22's real plan: the registered query materializes via
-    localCheckpoint (cache scoping), which would truncate the audited
-    plan to a checkpoint scan — audit the materialize=False variant."""
-    from pyspark.sql import functions as F
-
-    from goetl_spark import queries as catalog
-    from goetl_spark.operators.dedup import ngram_jaccard_pairs
-
-    return ngram_jaccard_pairs(catalog._t(spark, sf_dir, "documents"),
-                               threshold=0.1, max_df=64, materialize=False)
+EAGER = {"q48_stateful_stream"}
 
 
 def _lazy_q81(spark, sf_dir):
-    """Same localCheckpoint truncation as q22 — rebuild q81's packing
-    plan lazily (mirrors queries.py::q81_sequence_packing)."""
+    """q81's registered form materializes via localCheckpoint, which
+    would truncate the audited plan to a checkpoint scan — rebuild the
+    packing plan lazily (mirrors queries.py::q81_sequence_packing)."""
     from pyspark.sql import functions as F
 
     from goetl_spark import queries as catalog
@@ -156,8 +144,7 @@ def _lazy_q159(spark, sf_dir):
                                      materialize=False)
 
 
-LAZY_VARIANTS = {"q22_ngram_jaccard": _lazy_q22,
-                 "q81_sequence_packing": _lazy_q81,
+LAZY_VARIANTS = {"q81_sequence_packing": _lazy_q81,
                  "q109_top_supplier": _lazy_q109,
                  "q121_ntile_bins": _lazy_q121,
                  "q126_weighted_sample": _lazy_q126,
@@ -202,10 +189,7 @@ def main() -> None:
     jvm = spark.sparkSession._jvm if hasattr(spark, "sparkSession") else spark._jvm
 
     rows = []
-    # staged round-8 registrations audit alongside the live registry so
-    # every seat lands pre-audited
-    todo = {**catalog.queries(), **catalog.staged_queries()}
-    for name, fn in todo.items():
+    for name, fn in catalog.queries().items():
         if only and name not in only:
             continue
         if name in EAGER:

@@ -5,12 +5,17 @@ DuckDB over the same parquet tables, then compares row count, column
 names, and values (columns sorted by name, rows sorted, exact match with
 a tiny float report so drift is visible before the real gate runs).
 
+A run over the whole registry writes FULLCHECK.json with the failures,
+the query names, the scale-factor directory and ``code_hash()`` of the
+code it ran; tests/test_registry.py requires that hash to match HEAD.
+
 Usage: python scripts/check_oracle.py [sf_dir] [query_name ...]
 """
 
 from __future__ import annotations
 
-import math
+import hashlib
+import json
 import sys
 import time
 from pathlib import Path
@@ -18,10 +23,23 @@ from pathlib import Path
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
+
+
+def code_hash() -> str:
+    """sha256 over the sorted relative paths and bytes of every
+    ``goetl_spark/**/*.py`` file plus ``__spark_entry__.py``."""
+    files = sorted([*REPO.glob("goetl_spark/**/*.py"),
+                    REPO / "__spark_entry__.py"])
+    h = hashlib.sha256()
+    for f in files:
+        h.update(f.relative_to(REPO).as_posix().encode() + b"\0")
+        h.update(f.read_bytes() + b"\0")
+    return h.hexdigest()
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -84,11 +102,10 @@ def compare(name: str, spark_pd: pd.DataFrame, duck_pd: pd.DataFrame) -> list[st
 
 
 def main():
-    args = [a for a in sys.argv[1:] if a not in ("--staged", "--retired")]
-    staged = "--staged" in sys.argv[1:]
-    retired = "--retired" in sys.argv[1:]
+    args = sys.argv[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
+    head = code_hash()
 
     import __spark_entry__ as entry_mod
     from goetl_spark.session import get_spark
@@ -99,22 +116,8 @@ def main():
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
 
-    if staged:
-        # pre-verify staged registrations instead of the live registry
-        # (they are excluded from queries() until seated)
-        from goetl_spark import queries as catalog
-        qs = catalog.staged_queries()
-        oracles = catalog.staged_oracle_sql()
-    elif retired:
-        # replay the retired rows (round-11 retirement: seats
-        # surrendered, operators and oracles kept — see queries.py
-        # _RETIRED and OPERATORS.md "Registry retirement candidates")
-        from goetl_spark import queries as catalog
-        qs = catalog.retired_queries()
-        oracles = catalog.retired_oracle_sql()
-    else:
-        qs = entry_mod.queries()
-        oracles = entry_mod.oracle_sql()
+    qs = entry_mod.queries()
+    oracles = entry_mod.oracle_sql()
     failed = []
     for name, fn in qs.items():
         if only and name not in only:
@@ -157,26 +160,15 @@ def main():
         else:
             print(f"OK   {name} ({len(spark_pd)} rows, {time.time()-t0:.1f}s)")
     print(f"\n{len(failed)} failures" + (f": {failed}" if failed else ""))
-    if not staged and not retired and not only:
-        # FULLCHECK.json: machine-checked proof that the compensating
-        # control behind the widened staleness budget actually ran this
-        # round (r7 advisor ask). tests/test_registry.py asserts it
-        # covers the CURRENT registry with zero failures and postdates
-        # the latest recorded CORRECTNESS round.
-        import glob
-        import json as _json
-        import os as _os
-        repo = Path(__file__).resolve().parent.parent
-        rounds = [int(_os.path.basename(f).split("_r")[1].split(".")[0])
-                  for f in glob.glob(str(repo / "CORRECTNESS_r*.json"))]
-        (repo / "FULLCHECK.json").write_text(_json.dumps({
-            "against_round": max(rounds) if rounds else 0,
+    if not only:
+        (REPO / "FULLCHECK.json").write_text(json.dumps({
+            "code_hash": head,
             "sf_dir": sf_dir,
             "queries": sorted(qs),
             "failures": sorted(failed),
         }, indent=1))
         print(f"wrote FULLCHECK.json ({len(qs)} queries, "
-              f"{len(failed)} failures)")
+              f"{len(failed)} failures, code_hash {head[:12]})")
     spark.stop()
     sys.exit(1 if failed else 0)
 

@@ -34,8 +34,7 @@ def main() -> None:
     spark = get_spark("goetl-spark-explain", master=f"local[{cpus}]")
     out_dir = Path(__file__).resolve().parent.parent / "plans" / "r18"
     out_dir.mkdir(parents=True, exist_ok=True)
-    allq = dict(catalog.queries())
-    allq.update(catalog.staged_queries())
+    allq = catalog.queries()
     for name in names:
         fn = allq[name]
         df = fn(spark, sf_dir)

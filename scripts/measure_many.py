@@ -30,8 +30,7 @@ def main() -> None:
     from goetl_spark import queries as catalog
     from goetl_spark.session import get_spark
 
-    allq = dict(catalog.queries())
-    allq.update(catalog.staged_queries())
+    allq = catalog.queries()
     spark = get_spark("goetl-spark-measure", master=f"local[{cpus}]")
     bench.warm(spark, sf_dir, cpus)
     for name in names:

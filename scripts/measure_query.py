@@ -32,8 +32,7 @@ def main() -> None:
     from goetl_spark import queries as catalog
     from goetl_spark.session import get_spark
 
-    fn = dict(catalog.queries()).get(name) or catalog.staged_queries().get(
-        name) or catalog.retired_queries()[name]
+    fn = catalog.queries()[name]
     spark = get_spark("goetl-spark-measure", master=f"local[{cpus}]")
     bench.warm(spark, sf_dir, cpus)
 

@@ -34,8 +34,7 @@ def main() -> None:
     from goetl_spark import queries as catalog
     from goetl_spark.session import get_spark
 
-    fn = dict(catalog.queries()).get(name) or catalog.staged_queries().get(
-        name) or catalog.retired_queries()[name]
+    fn = catalog.queries()[name]
     spark = get_spark(
         "goetl-spark-profile", master=f"local[{cpus}]",
         extra_conf={"spark.eventLog.enabled": "true",

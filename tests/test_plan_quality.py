@@ -1,10 +1,10 @@
-"""Mechanical anti-pattern gate over EVERY live + staged query plan.
+"""Mechanical anti-pattern gate over EVERY registered query plan.
 
 PLAN_AUDIT.md records shuffle/broadcast/pushdown counts per round, but
 until now nothing FAILED when a scale anti-pattern crept into a plan —
 the r9 q89 global-window fixture survived two rounds because the audit
 was a report, not a gate. This module walks the physical plan tree of
-every registered and staged catalog query (via py4j node introspection,
+every registered catalog query (via py4j node introspection,
 AQE unwrapped, subqueries included) and asserts the four invariants the
 verdicts check by hand:
 
@@ -49,7 +49,7 @@ from goetl_spark import queries as catalog  # noqa: E402
 
 # replay-inside-the-fn streaming queries: returned DF is a memory sink
 _STREAMING_EXEC = {
-    "q31_streaming_tumbling", "q48_stateful_stream", "q57_streaming_dedup",
+    "q48_stateful_stream", "q57_streaming_dedup",
     "q58_stream_stream_join", "q93_stream_dedup_ingest", "q139_funnel_stream",
     "q140_zscore_stream", "q158_stream_bloom_cut", "q170_heavy_hitters_stream",
     "q183_holt_stream", "q190_cusum_stream", "q210_stream_rollup",
@@ -113,8 +113,7 @@ def _bnlj_build_bounded(bnlj) -> bool:
 
 
 def _gate_names() -> list[str]:
-    todo = {**catalog.queries(), **catalog.staged_queries()}
-    return sorted(n for n in todo if n not in _STREAMING_EXEC)
+    return sorted(n for n in catalog.queries() if n not in _STREAMING_EXEC)
 
 
 # Driver-hash-safe output types. The r14 driver hash-failed q221/q223
@@ -122,7 +121,7 @@ def _gate_names() -> list[str]:
 # the driver `Decimal(...)` objects while DuckDB's pandas bridge hands
 # back float64: numerically equal, canonicalizes differently, hash
 # mismatch. This gate makes the emitted-type contract mechanical: every
-# live + staged query (streaming included — their memory-sink reads are
+# registered query (streaming included — their memory-sink reads are
 # hashed the same way) may emit ONLY types both engines canonicalize
 # identically. Round decimal-grid arithmetic INTERNALLY all you want;
 # cast to double before emitting (quality.py::psi_from_counts is the
@@ -133,15 +132,9 @@ _HASH_SAFE_TYPES = {
 }
 
 
-def _type_gate_names() -> list[str]:
-    todo = {**catalog.queries(), **catalog.staged_queries()}
-    return sorted(todo)
-
-
-@pytest.mark.parametrize("name", _type_gate_names())
+@pytest.mark.parametrize("name", sorted(catalog.queries()))
 def test_hash_safe_output_types(spark, name):
-    todo = {**catalog.queries(), **catalog.staged_queries()}
-    fn = LAZY_VARIANTS.get(name, todo[name])
+    fn = LAZY_VARIANTS.get(name, catalog.queries()[name])
     df = fn(spark, "/root/testdata/sf0.001")
     bad = [(f.name, f.dataType.simpleString()) for f in df.schema.fields
            if f.dataType.simpleString() not in _HASH_SAFE_TYPES]
@@ -153,8 +146,7 @@ def test_hash_safe_output_types(spark, name):
 
 @pytest.mark.parametrize("name", _gate_names())
 def test_no_scale_antipatterns(spark, name):
-    todo = {**catalog.queries(), **catalog.staged_queries()}
-    fn = LAZY_VARIANTS.get(name, todo[name])
+    fn = LAZY_VARIANTS.get(name, catalog.queries()[name])
     df = fn(spark, "/root/testdata/sf0.001")
     plan = df._jdf.queryExecution().executedPlan()
 

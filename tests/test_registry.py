@@ -1,179 +1,89 @@
-"""Registry / correctness-window invariants (round-5 verdict ask #5).
+"""Registry invariants.
 
-The driver's correctness pass covers only the FIRST 50 entries of
-``queries()`` each round; ``_WINDOW`` in goetl_spark.queries curates
-that order. These tests pin the rotation contract as the registry
-grows past 50:
+The external correctness gate checks the first 50 keys of ``queries()``
+against DuckDB at sf0.01 and records them in CORRECTNESS_r*.json (the
+"window"). The full registry is verified by ``scripts/check_oracle.py``,
+which writes FULLCHECK.json with the content hash of the code it ran.
+These tests pin:
 
-- the window is exactly min(50, registry size) entries, all valid;
-- every registered query either sits in the upcoming window or already
-  has a driver row in the union of CORRECTNESS_r*.json artifacts (the
-  union stays at 100 % after every round);
-- no query goes stale: anything absent from the artifacts of the last
-  FIVE recorded rounds must be seated in the upcoming window. (The
-  budget was two rounds through round 6, three through most of
-  round 7, and four through round 10; each widening happened when the
-  registry approached the window-capacity ceiling — two windows cap at
-  100 distinct queries, three at 150, four at 200. The round-11
-  widening to five (capacity 250) was mandated by the r10 verdict:
-  the r10 rotation never executed, so r11 inherited 73 expiring + 25
-  staged claims on 50 seats — infeasible at budget 4 even after the
-  12-row retirement. The COMPENSATING CONTROL is unchanged and
-  stronger than this rule: `scripts/check_oracle.py` re-verifies the
-  FULL registry against DuckDB every round — builder at round start
-  and end, judge independently (both ran it green at r10:
-  FULLCHECK.json against_round=10, and the judge's own 173-OK run) —
-  so staleness here only bounds the driver-artifact trail, not actual
-  verification cadence.)
+- the window leads with the queries that have no CORRECTNESS row yet
+  (``_NEW_QUERIES``), then follows registration order;
+- every registered query has a CORRECTNESS row or sits in the window;
+- FULLCHECK.json is green, covers exactly the registry at sf0.01, and
+  was produced by the code at HEAD. Any edit under ``goetl_spark/`` or
+  to ``__spark_entry__.py`` fails this until a full
+  ``scripts/check_oracle.py`` run at sf0.01 is repeated.
 """
 from __future__ import annotations
 
 import glob
+import importlib.util
 import json
 import os
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+_spec = importlib.util.spec_from_file_location(
+    "check_oracle", os.path.join(REPO, "scripts", "check_oracle.py"))
+check_oracle = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(check_oracle)
 
-def _artifacts() -> dict[int, set[str]]:
-    out = {}
-    for f in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        rnd = int(os.path.basename(f).split("_r")[1].split(".")[0])
+
+def _gate_rows() -> set[str]:
+    out: set[str] = set()
+    for f in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
         try:
-            out[rnd] = set(json.load(open(f)).keys())
+            out |= set(json.load(open(f)).keys())
         except (json.JSONDecodeError, AttributeError):
             continue
     return out
 
 
 def test_window_shape():
-    from goetl_spark.queries import _REGISTRY, _WINDOW
+    """The window is the first 50 keys of queries(): distinct,
+    registered, led by the queries with no CORRECTNESS row yet."""
+    from goetl_spark.queries import _NEW_QUERIES, _REGISTRY, queries
 
-    assert len(_WINDOW) == min(50, len(_REGISTRY))
-    assert len(set(_WINDOW)) == len(_WINDOW), "duplicate window entries"
-    missing = [n for n in _WINDOW if n not in _REGISTRY]
-    assert not missing, f"window names not registered: {missing}"
+    window = list(queries())[:50]
+    assert len(window) == min(50, len(_REGISTRY))
+    assert len(set(window)) == len(window), "duplicate window entries"
+    assert window[: len(_NEW_QUERIES)] == _NEW_QUERIES
 
 
 def test_window_is_queries_prefix():
-    """The driver takes the first 50 of queries() — the window must BE
-    that prefix, or the curation is dead code."""
-    from goetl_spark.queries import _WINDOW, queries
+    """queries() is _NEW_QUERIES followed by every other registered
+    name in registration order, so the window needs no bookkeeping."""
+    from goetl_spark.queries import _NEW_QUERIES, _REGISTRY, queries
 
-    assert list(queries().keys())[: len(_WINDOW)] == _WINDOW
+    rest = [n for n in _REGISTRY if n not in _NEW_QUERIES]
+    assert list(queries()) == _NEW_QUERIES + rest
 
 
-def test_union_coverage_and_staleness():
-    """Every registered query has a past driver row or an upcoming seat;
-    nothing sits out more than five consecutive recorded rounds (see
-    module docstring for the widening history and compensating
-    control)."""
-    from goetl_spark.queries import _REGISTRY, _WINDOW
+def test_union_coverage():
+    """A new query has no CORRECTNESS row yet: list it in _NEW_QUERIES
+    so the next gate run checks it."""
+    from goetl_spark.queries import queries
 
-    arts = _artifacts()
-    if not arts:  # fresh clone without artifacts: nothing to check
+    rows = _gate_rows()
+    if not rows:  # fresh clone without artifacts: nothing to check
         return
-    union = set().union(*arts.values())
-    window = set(_WINDOW)
-
-    uncovered = [n for n in _REGISTRY if n not in union and n not in window]
+    window = set(list(queries())[:50])
+    uncovered = [n for n in queries() if n not in rows and n not in window]
     assert not uncovered, (
-        f"queries with no driver row and no window seat: {uncovered}")
-
-    latest = max(arts)
-    recent = set().union(*(arts.get(latest - i, set()) for i in range(5)))
-    stale = [n for n in _REGISTRY if n not in recent and n not in window]
-    assert not stale, (
-        f"queries absent from rounds {latest - 4}-{latest} and not seated "
-        f"for the next round: {stale}")
+        f"queries with no CORRECTNESS row outside the window: {uncovered}")
 
 
-def test_fullcheck_backstop_for_widened_staleness_budget():
-    """The 5-round staleness budget is only sound because the FULL
-    registry re-verifies against DuckDB every round. That control used
-    to live in a docstring; this test makes it machine-checked (r7
-    advisor ask): scripts/check_oracle.py writes FULLCHECK.json on
-    every full-registry run, and this asserts the artifact (a) exists,
-    (b) recorded zero failures, (c) covers every currently registered
-    query, and (d) postdates the latest recorded CORRECTNESS round —
-    i.e. the control ran THIS round, not a stale one. Registering a new
-    query or rotating the window without re-running the full check
-    fails here by design: run `python scripts/check_oracle.py` to
-    refresh."""
-    from goetl_spark.queries import _REGISTRY
+def test_fullcheck_at_head(sf_dir):
+    from goetl_spark.queries import queries
 
-    arts = _artifacts()
-    if not arts:
-        return
+    gate_sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    rerun = f"re-run python scripts/check_oracle.py {gate_sf}"
     path = os.path.join(REPO, "FULLCHECK.json")
-    assert os.path.exists(path), (
-        "FULLCHECK.json missing — run scripts/check_oracle.py over the "
-        "full registry (the compensating control for the 5-round "
-        "staleness budget)")
+    assert os.path.exists(path), f"FULLCHECK.json missing — {rerun}"
     fc = json.load(open(path))
     assert fc["failures"] == [], f"full-registry check failed: {fc['failures']}"
-    missing = sorted(set(_REGISTRY) - set(fc["queries"]))
-    assert not missing, (
-        f"FULLCHECK.json predates registration of {missing} — re-run "
-        "scripts/check_oracle.py")
-    latest = max(arts)
-    if fc["against_round"] < latest:
-        # Round-boundary semantics (r8 verdict ask #6, decided r9 —
-        # see ROADMAP "FULLCHECK boundary semantics"): the builder's
-        # final refresh necessarily predates the driver's CORRECTNESS
-        # drop for the same round, so a fresh clone right after a
-        # round close would fail a strict >=. Tolerate EXACTLY ONE
-        # round of lag, and only when the newer driver artifact is
-        # itself all-green — that drop IS a fresh independent
-        # verification of every query FULLCHECK could have missed, so
-        # the union still covers the full registry this round. Any
-        # driver-reported failure, or >1 round of lag, stays red.
-        assert fc["against_round"] == latest - 1, (
-            f"FULLCHECK.json was produced against round "
-            f"{fc['against_round']} but CORRECTNESS_r{latest} exists — "
-            "re-run scripts/check_oracle.py this round")
-        rows = json.load(
-            open(os.path.join(REPO, f"CORRECTNESS_r{latest:02d}.json")))
-        not_green = sorted(
-            n for n, r in rows.items()
-            if r.get("err") is not None or r.get("rows_match") is False
-            or r.get("hash_match") is False)
-        assert not not_green, (
-            f"FULLCHECK.json lags CORRECTNESS_r{latest} and that window "
-            f"has non-green rows {not_green} — re-run "
-            "scripts/check_oracle.py")
-
-
-def test_plan_window_consistent_with_staleness_rule():
-    """scripts/plan_window.py must agree with this module's staleness
-    math: every query it calls HARD-mandatory for the next round is
-    exactly one that would fail test_union_coverage_and_staleness if
-    the upcoming window were recorded and the query left unseated."""
-    import importlib.util
-
-    from goetl_spark.queries import _REGISTRY, _WINDOW
-
-    spec = importlib.util.spec_from_file_location(
-        "plan_window", os.path.join(REPO, "scripts", "plan_window.py"))
-    pw = importlib.util.module_from_spec(spec)
-    # main() prints; replicate its set math directly
-    arts = _artifacts()
-    if not arts:
-        return
-    latest = max(arts)
-    upcoming = {latest + 1: set(_WINDOW), **arts}
-    nxt = latest + 2
-    recent = set().union(*(upcoming.get(nxt - i, set())
-                           for i in range(1, 6)))
-    mandatory = {q for q in _REGISTRY if q not in recent}
-    # sanity: the planner's module loads and the current window covers
-    # everything stale for the upcoming round (the live invariant)
-    spec.loader.exec_module(pw)
-    stale_now = {q for q in _REGISTRY
-                 if q not in set().union(*(arts.get(latest - i, set())
-                                           for i in range(5)))
-                 and q not in set(_WINDOW)}
-    assert not stale_now
-    # and anything hard-mandatory next round is currently unseated+old
-    for q in mandatory:
-        assert q in _REGISTRY
+    assert fc["queries"] == sorted(queries()), (
+        f"FULLCHECK.json covers a different registry — {rerun}")
+    assert fc["sf_dir"] == gate_sf
+    assert fc["code_hash"] == check_oracle.code_hash(), (
+        f"FULLCHECK.json was produced by different code than HEAD — {rerun}")

@@ -304,3 +304,6 @@ def test_mix_token_budget_shares(spark):
         mix_token_budget([(a, 0.7), (b, 0.2)], "n_tok", 100)
     with pytest.raises(ValueError, match="positive"):
         mix_token_budget([(a, 1.5), (b, -0.5)], "n_tok", 100)
+    # a positive share that rounds to a zero-token budget raises
+    with pytest.raises(ValueError, match="budget must be > 0"):
+        mix_token_budget([(a, 0.999), (b, 0.001)], "n_tok", 100)
